@@ -12,6 +12,12 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
+  /** Fixed-point JSON number: Locale.ROOT, so a comma-decimal default
+    * locale cannot turn the contract line into invalid JSON.
+    */
+  private[graft] def fmt(v: Double, decimals: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
+
   /** Headline subset: the heavier relational/window/dedup/similarity ops.
     * q_jaccard_pairs is back in the list (round 2): its blocking join is
     * frequency-capped (maxDocFreq), which bounds the hot-shingle quadratic
@@ -127,16 +133,16 @@ object Bench {
     // sums real timings — a fully-failing query invalidates comparability,
     // it doesn't make the run faster
     val total = results.values.sum
-    val qs = (results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" } ++
+    val qs = (results.map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) } ++
         failed.map(k => "\"" + k + "\":null"))
       .mkString("{", ",", "}")
     val ss = samples.map { case (k, vs) =>
-      "\"" + k + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
+      "\"" + k + "\":" + vs.map(v => fmt(v, 3)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val seededPps = if (seededSec > 0) seededPages / seededSec else 0.0
     val skewPps = if (skewSec > 0) skewPages / skewSec else 0.0
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"samples":$ss,"failed":$fl,"reps":$reps,"sf":"$sfDir","cpus":$cpus,"crawl_pages":$pages,"crawl_waves":$waves,"crawl_pages_per_sec":${f"$pagesPerSec%.1f"},"seeded_seen_rows":1000000,"seeded_bloom_engaged":$seededBloom,"seeded_pages":$seededPages,"seeded_pages_per_sec":${f"$seededPps%.1f"},"forget_batch_size":$forgetBatch,"forget_retracted":$forgetRetracted,"forget_buckets_to_cuckoo":$forgetToCuckoo,"forget_buckets_incremental":$forgetIncr,"skew_pages":$skewPages,"skew_waves":$skewWaves,"skew_hot_max_per_wave":$skewHotMax,"skew_pages_per_sec":${f"$skewPps%.1f"}}""")
+    println(s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs,"samples":$ss,"failed":$fl,"reps":$reps,"sf":"$sfDir","cpus":$cpus,"crawl_pages":$pages,"crawl_waves":$waves,"crawl_pages_per_sec":${fmt(pagesPerSec, 1)},"seeded_seen_rows":1000000,"seeded_bloom_engaged":$seededBloom,"seeded_pages":$seededPages,"seeded_pages_per_sec":${fmt(seededPps, 1)},"forget_batch_size":$forgetBatch,"forget_retracted":$forgetRetracted,"forget_buckets_to_cuckoo":$forgetToCuckoo,"forget_buckets_incremental":$forgetIncr,"skew_pages":$skewPages,"skew_waves":$skewWaves,"skew_hot_max_per_wave":$skewHotMax,"skew_pages_per_sec":${fmt(skewPps, 1)}}""")
     spark.stop()
   }
 

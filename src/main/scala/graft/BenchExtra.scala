@@ -46,7 +46,7 @@ object BenchExtra {
     val (warmSec, _) = leg(1000L) // JIT/codegen warmup, untimed leg
     val (cappedSec, cappedRemoved) = leg(1000L)
     val (uncappedSec, uncappedRemoved) = leg(Long.MaxValue)
-    println(s"""{"metric":"exact_substr_skew","docs":$nDocs,"hot_docs":${nDocs / 2},"warm_sec":${f"$warmSec%.3f"},"capped_sec":${f"$cappedSec%.3f"},"capped_removed":$cappedRemoved,"uncapped_sec":${f"$uncappedSec%.3f"},"uncapped_removed":$uncappedRemoved}""")
+    println(s"""{"metric":"exact_substr_skew","docs":$nDocs,"hot_docs":${nDocs / 2},"warm_sec":${Bench.fmt(warmSec, 3)},"capped_sec":${Bench.fmt(cappedSec, 3)},"capped_removed":$cappedRemoved,"uncapped_sec":${Bench.fmt(uncappedSec, 3)},"uncapped_removed":$uncappedRemoved}""")
     spark.stop()
   }
 }

@@ -181,8 +181,7 @@ object Graft {
     import spark.implicits._
     val docs = documentsTyped(spark, warehouse)
     val items = docs.flatMap { d =>
-      graft.extract.DocAnalysis.analyzableItems(d.spans)
-        .map(it => (d.seq, it.offset, it.text_hash))
+      graft.extract.DocAnalysis.textKeys(d.spans).map(k => (d.seq, k.offset, k.text_hash))
     }.toDF("seq", "offset", "text_hash")
     val w = Window.partitionBy($"text_hash").orderBy($"seq", $"offset")
     val owned = items.withColumn("rn", row_number().over(w)).filter($"rn" === 1)

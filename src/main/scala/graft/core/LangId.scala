@@ -24,6 +24,16 @@ package graft.core
   * belong to one non-Latin script, the text maps to that script's
   * dominant language (documented deviation: fastText distinguishes e.g.
   * ru/uk/bg within Cyrillic; the dominant-script map does not).
+  *
+  * Kernel: every gram is a packed integer key whose order equals
+  * String.compareTo on the gram text (see the machinery section), so the
+  * frequency-then-text ranking never builds a String. Counts go into a
+  * per-thread primitive open-addressing table that is reused across calls;
+  * the top-[[ProfileSize]] cut walks a histogram of the counts and sorts
+  * only the grams above the boundary count plus the ties at it; the
+  * distance loop looks each ranked key up once in a table holding all
+  * seven language ranks. Case folding uses Locale.ROOT, so results do not
+  * depend on the JVM's default locale.
   */
 object LangId {
 
@@ -135,80 +145,249 @@ object LangId {
     */
   private val langsOrdered = Vector("en", "fr", "de", "es", "it", "pt", "nl")
 
-  // --- Cavnar–Trenkle machinery ------------------------------------------
+  private val Scripts = Character.UnicodeScript.values
 
-  /** Character 1..5-gram counts of word-padded lowercase text ("_word_"),
-    * per the paper's tokenization (digits and punctuation never enter a
-    * gram; padding marks word boundaries).
+  // --- Cavnar–Trenkle machinery ------------------------------------------
+  //
+  // Grams are 1..5 chars of word-padded lowercase text ("_word_", per the
+  // paper's tokenization: digits and punctuation never enter a gram). A gram
+  // is packed into two primitives: `hi` holds chars 0..3 as 16-bit fields,
+  // char 0 in the top bits, and `lo` holds char 4; absent positions are 0.
+  // No gram char is U+0000, so ordering by `hi` unsigned and then `lo` is
+  // exactly String.compareTo on the grams (a shorter gram is a prefix padded
+  // with 0, and sorts first). Counting, top-K selection and the rank-distance
+  // lookups run on these keys; only [[profile]] decodes them to Strings.
+
+  /** Open-addressing map from packed gram keys to a positive Int (a count
+    * while profiling a text; a row of [[langRanks]] in [[langGrams]]).
+    * Value 0 marks an empty slot; `used` lists the filled slots in insertion
+    * order, so clearing and scanning touch only those.
     */
-  private def ngramCounts(text: String, maxChars: Int): java.util.HashMap[String, Int] = {
-    val counts = new java.util.HashMap[String, Int](1024)
-    val slice = if (text.length > maxChars) text.substring(0, maxChars) else text
-    val lower = slice.toLowerCase
-    val word = new StringBuilder("_")
-    def flush(): Unit = {
-      if (word.length > 1) {
-        word.append('_')
-        val w = word.toString
-        val len = w.length
-        var n = 1
-        while (n <= 5) {
-          var i = 0
-          while (i + n <= len) {
-            val g = w.substring(i, i + n)
-            counts.merge(g, 1, (a, b) => a + b)
-            i += 1
-          }
-          n += 1
+  private final class GramTable(private var bits: Int) {
+    var hi = new Array[Long](1 << bits)
+    var lo = new Array[Int](1 << bits)
+    var value = new Array[Int](1 << bits)
+    var used = new Array[Int](1 << bits)
+    var size = 0
+
+    private def slot(h: Long, l: Int): Int = {
+      val mask = (1 << bits) - 1
+      var i = (((h + l * 0xC2B2AE3D27D4EB4FL) * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+      while (value(i) != 0 && (hi(i) != h || lo(i) != l)) i = (i + 1) & mask
+      i
+    }
+
+    def get(h: Long, l: Int): Int = value(slot(h, l))
+
+    def increment(h: Long, l: Int): Unit = {
+      var i = slot(h, l)
+      if (value(i) != 0) value(i) += 1
+      else {
+        if (2 * (size + 1) > value.length) { grow(); i = slot(h, l) }
+        hi(i) = h; lo(i) = l; value(i) = 1; used(size) = i; size += 1
+      }
+    }
+
+    def clear(): Unit = {
+      var k = 0
+      while (k < size) { value(used(k)) = 0; k += 1 }
+      size = 0
+    }
+
+    private def grow(): Unit = {
+      val (oh, ol, ov, ou) = (hi, lo, value, used)
+      bits += 1
+      hi = new Array[Long](1 << bits); lo = new Array[Int](1 << bits)
+      value = new Array[Int](1 << bits); used = new Array[Int](1 << bits)
+      var k = 0
+      while (k < size) {
+        val o = ou(k)
+        val i = slot(oh(o), ol(o))
+        hi(i) = oh(o); lo(i) = ol(o); value(i) = ov(o); used(k) = i
+        k += 1
+      }
+    }
+  }
+
+  /** Per-thread working memory of [[profile]] and [[detect]], reused across
+    * calls: the gram counts, the ranked profile (slots of `grams`), the
+    * boundary ties and count histogram of the top-K selection, and the
+    * per-script letter counts of [[detect]]. Its size follows the largest
+    * text profiled on the thread, which [[detect]] caps at
+    * [[MaxProfileChars]].
+    */
+  private final class Scratch {
+    val grams = new GramTable(10)
+    val ranked = new Array[Int](ProfileSize)
+    var ties = new Array[Int](ProfileSize)
+    var buf = new Array[Int](ProfileSize) // merge buffer, as long as `ties`
+    var hist = new Array[Int](256)
+    val scripts = new Array[Int](Scripts.length)
+    val dist = new Array[Long](langsOrdered.size)
+  }
+
+  private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
+
+  /** Counts the grams that end with symbol `c` of a padded word that holds
+    * `k` symbols before it, the last four packed in `w` (newest lowest).
+    */
+  private def countGrams(g: GramTable, w: Long, k: Int, c: Char): Unit = {
+    val x = (w << 16) | c
+    g.increment(x << 48, 0)
+    if (k >= 1) g.increment(x << 32, 0)
+    if (k >= 2) g.increment(x << 16, 0)
+    if (k >= 3) g.increment(x, 0)
+    if (k >= 4) g.increment(w, c)
+  }
+
+  /** Rank order: higher count first, ties by gram text. */
+  private def ranksBefore(g: GramTable, x: Int, y: Int): Boolean = {
+    val cx = g.value(x)
+    val cy = g.value(y)
+    if (cx != cy) cx > cy
+    else {
+      val c = java.lang.Long.compareUnsigned(g.hi(x), g.hi(y))
+      c < 0 || (c == 0 && g.lo(x) < g.lo(y))
+    }
+  }
+
+  /** Merge sort of the slots `a(from until to)` into rank order, through
+    * `buf` (at least as long as `a`); short runs are insertion-sorted.
+    */
+  private def sortSlots(g: GramTable, a: Array[Int], buf: Array[Int], from: Int, to: Int): Unit =
+    if (to - from <= 12) {
+      var i = from + 1
+      while (i < to) {
+        val v = a(i)
+        var j = i - 1
+        while (j >= from && ranksBefore(g, v, a(j))) { a(j + 1) = a(j); j -= 1 }
+        a(j + 1) = v
+        i += 1
+      }
+    } else {
+      val mid = (from + to) >>> 1
+      sortSlots(g, a, buf, from, mid)
+      sortSlots(g, a, buf, mid, to)
+      if (ranksBefore(g, a(mid), a(mid - 1))) {
+        System.arraycopy(a, from, buf, from, mid - from)
+        var i = from
+        var j = mid
+        var k = from
+        while (i < mid) {
+          if (j < to && ranksBefore(g, a(j), buf(i))) { a(k) = a(j); j += 1 }
+          else { a(k) = buf(i); i += 1 }
+          k += 1
         }
       }
-      word.setLength(1)
     }
+
+  /** Counts the grams of the first `maxChars` chars of `text` into
+    * `s.grams` and writes the ranked profile's slots to `s.ranked`; returns
+    * the profile length (at most [[ProfileSize]]). Top-K selection walks a
+    * histogram of the counts down to the boundary count, so only the grams
+    * above it and the ties at it are sorted, never every distinct gram.
+    */
+  private def rankGrams(text: String, maxChars: Int, s: Scratch): Int = {
+    val slice = if (text.length > maxChars) text.substring(0, maxChars) else text
+    val lower = slice.toLowerCase(java.util.Locale.ROOT)
+    val g = s.grams
+    g.clear()
+    var w = 0L // last four symbols of the current padded word, newest lowest
+    var k = 0  // symbols of the current padded word so far; 0 outside a word
     var i = 0
-    while (i < lower.length) {
-      val c = lower.charAt(i)
-      if (Character.isLetter(c)) word.append(c) else flush()
+    while (i <= lower.length) {
+      val c = if (i < lower.length) lower.charAt(i) else ' '
+      if (Character.isLetter(c)) {
+        if (k == 0) { countGrams(g, 0L, 0, '_'); w = '_'; k = 1 }
+        countGrams(g, w, k, c)
+        w = (w << 16) | c
+        k += 1
+      } else if (k > 0) {
+        countGrams(g, w, k, '_')
+        w = 0L
+        k = 0
+      }
       i += 1
     }
-    flush()
-    counts
+    if (g.size <= ProfileSize) {
+      System.arraycopy(g.used, 0, s.ranked, 0, g.size)
+      sortSlots(g, s.ranked, s.buf, 0, g.size)
+      return g.size
+    }
+    var maxCount = 0
+    var u = 0
+    while (u < g.size) { maxCount = math.max(maxCount, g.value(g.used(u))); u += 1 }
+    if (s.hist.length <= maxCount) s.hist = new Array[Int](maxCount + 1)
+    java.util.Arrays.fill(s.hist, 0, maxCount + 1, 0)
+    u = 0
+    while (u < g.size) { s.hist(g.value(g.used(u))) += 1; u += 1 }
+    var boundary = maxCount
+    var above = 0 // grams with a count above `boundary`
+    while (above + s.hist(boundary) < ProfileSize) { above += s.hist(boundary); boundary -= 1 }
+    if (s.ties.length < s.hist(boundary)) {
+      s.ties = new Array[Int](s.hist(boundary))
+      s.buf = new Array[Int](s.hist(boundary))
+    }
+    var nAbove = 0
+    var nTies = 0
+    u = 0
+    while (u < g.size) {
+      val slot = g.used(u)
+      val v = g.value(slot)
+      if (v > boundary) { s.ranked(nAbove) = slot; nAbove += 1 }
+      else if (v == boundary) { s.ties(nTies) = slot; nTies += 1 }
+      u += 1
+    }
+    sortSlots(g, s.ranked, s.buf, 0, nAbove)
+    sortSlots(g, s.ties, s.buf, 0, nTies)
+    System.arraycopy(s.ties, 0, s.ranked, nAbove, ProfileSize - nAbove)
+    ProfileSize
   }
 
   /** Ranked n-gram profile (most frequent first, ties by gram text for
     * bit-stable profiles), truncated to [[ProfileSize]].
     */
   def profile(text: String, maxChars: Int = Int.MaxValue): Vector[String] = {
-    val counts = ngramCounts(text, maxChars)
-    val arr = new Array[(String, Int)](counts.size)
-    val it = counts.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) { val e = it.next(); arr(i) = (e.getKey, e.getValue); i += 1 }
-    arr.sortBy { case (g, c) => (-c, g) }.iterator.take(ProfileSize)
-      .map(_._1).toVector
+    val s = scratch.get
+    val n = rankGrams(text, maxChars, s)
+    val g = s.grams
+    Vector.tabulate(n) { r =>
+      val slot = s.ranked(r)
+      val h = g.hi(slot)
+      val cs = new Array[Char](5)
+      var len = 0
+      while (len < 4 && ((h >>> (48 - 16 * len)) & 0xFFFF) != 0) {
+        cs(len) = (h >>> (48 - 16 * len)).toChar
+        len += 1
+      }
+      if (g.lo(slot) != 0) { cs(4) = g.lo(slot).toChar; len = 5 }
+      new String(cs, 0, len)
+    }
   }
 
-  /** gram → rank per language, trained once at class load. */
-  private[graft] lazy val profiles: Vector[(String, java.util.HashMap[String, Integer])] =
-    langsOrdered.map { lang =>
-      val m = new java.util.HashMap[String, Integer](ProfileSize * 2)
-      profile(training(lang)).zipWithIndex.foreach { case (g, r) => m.put(g, r) }
-      (lang, m)
-    }
-
-  /** Out-of-place distance of a document profile against one language
-    * profile, normalized to [0, 1]: per document gram, |docRank −
-    * langRank|, missing grams cost the maximum ([[ProfileSize]]).
+  /** Union of the trained language profiles' grams; a gram's value is its
+    * row in [[langRanks]] plus one.
     */
-  private[graft] def normDistance(docProf: Vector[String],
-      langRanks: java.util.HashMap[String, Integer]): Double = {
-    var dist = 0L
-    var i = 0
-    while (i < docProf.length) {
-      val r = langRanks.get(docProf(i))
-      dist += (if (r == null) ProfileSize else math.abs(i - r.intValue()))
-      i += 1
+  private val langGrams = new GramTable(12)
+
+  /** Rank of each [[langGrams]] row per language (row-major, languages in
+    * [[langsOrdered]] order); -1 when the gram is not in that profile.
+    */
+  private val langRanks: Array[Int] = {
+    val trained = langsOrdered.map { lang =>
+      val s = new Scratch
+      val n = rankGrams(training(lang), Int.MaxValue, s)
+      (s.grams, s.ranked.take(n))
     }
-    dist.toDouble / (docProf.length.toLong * ProfileSize)
+    trained.foreach { case (g, ranked) => ranked.foreach(slot => langGrams.increment(g.hi(slot), g.lo(slot))) }
+    (0 until langGrams.size).foreach(row => langGrams.value(langGrams.used(row)) = row + 1)
+    val ranks = Array.fill(langGrams.size * langsOrdered.size)(-1)
+    trained.zipWithIndex.foreach { case ((g, ranked), li) =>
+      ranked.zipWithIndex.foreach { case (slot, r) =>
+        ranks((langGrams.get(g.hi(slot), g.lo(slot)) - 1) * langsOrdered.size + li) = r
+      }
+    }
+    ranks
   }
 
   // --- non-Latin script fast path ------------------------------------------
@@ -226,49 +405,69 @@ object LangId {
 
   /** Classify one text. "?" when fewer than 2 words or no trained language
     * profile is within [[MaxNormDistance]] (the probability-floor analog).
+    * The document profile's out-of-place distance to each language profile
+    * is |docRank − langRank| per document gram, a missing gram costing the
+    * maximum ([[ProfileSize]]), normalized to [0, 1].
     */
   def detect(text: String): String = {
     if (text == null) return "?"
+    val s = scratch.get
     // word floor first (reference behavior: too little signal → "?")
     var words = 0
     var inWord = false
     var li = 0
     var latinLetters = 0
     var otherLetters = 0
-    val scriptCounts = new java.util.EnumMap[Character.UnicodeScript, Integer](
-      classOf[Character.UnicodeScript])
     while (li < text.length) {
       val c = text.charAt(li)
       if (Character.isLetter(c)) {
         if (!inWord) { words += 1; inWord = true }
-        val s = Character.UnicodeScript.of(c)
-        if (s == Character.UnicodeScript.LATIN) latinLetters += 1
+        if (c < 0x80) latinLetters += 1 // ASCII letters are all Latin script
         else {
-          otherLetters += 1
-          scriptCounts.merge(s, 1, (a, b) => a + b)
+          val sc = Character.UnicodeScript.of(c)
+          if (sc == Character.UnicodeScript.LATIN) latinLetters += 1
+          else { otherLetters += 1; s.scripts(sc.ordinal) += 1 }
         }
       } else inWord = false
       li += 1
     }
-    if (words < 2 && otherLetters == 0) return "?"
-    if (otherLetters > latinLetters) {
-      // dominant non-Latin script decides
-      var bestScript: Character.UnicodeScript = null
+    // dominant non-Latin script, first in script order on ties; resets counts
+    var bestScript = -1
+    if (otherLetters > 0) {
       var bestN = 0
-      val it = scriptCounts.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getValue > bestN) { bestN = e.getValue; bestScript = e.getKey }
+      var o = 0
+      while (o < s.scripts.length) {
+        if (s.scripts(o) > bestN) { bestN = s.scripts(o); bestScript = o }
+        s.scripts(o) = 0
+        o += 1
       }
-      return scriptLang.getOrElse(bestScript, "?")
     }
-    val docProf = profile(text, MaxProfileChars)
-    if (docProf.isEmpty) return "?"
+    if (words < 2 && otherLetters == 0) return "?"
+    if (otherLetters > latinLetters) return scriptLang.getOrElse(Scripts(bestScript), "?")
+    val n = rankGrams(text, MaxProfileChars, s)
+    if (n == 0) return "?"
+    val g = s.grams
+    val nLangs = langsOrdered.size
+    java.util.Arrays.fill(s.dist, 0L)
+    var r = 0
+    while (r < n) {
+      val slot = s.ranked(r)
+      val row = langGrams.get(g.hi(slot), g.lo(slot)) - 1
+      var l = 0
+      while (l < nLangs) {
+        val lr = if (row < 0) -1 else langRanks(row * nLangs + l)
+        s.dist(l) += (if (lr < 0) ProfileSize else math.abs(r - lr))
+        l += 1
+      }
+      r += 1
+    }
     var bestLang = "?"
     var bestDist = Double.MaxValue
-    profiles.foreach { case (lang, ranks) =>
-      val d = normDistance(docProf, ranks)
-      if (d < bestDist) { bestDist = d; bestLang = lang }
+    var l = 0
+    while (l < nLangs) {
+      val d = s.dist(l).toDouble / (n.toLong * ProfileSize)
+      if (d < bestDist) { bestDist = d; bestLang = langsOrdered(l) }
+      l += 1
     }
     if (bestDist <= MaxNormDistance) bestLang else "?"
   }
@@ -298,7 +497,7 @@ object LangId {
     * held-out fixtures.
     */
   def stopwordHeuristic(text: String): String = {
-    val words = text.toLowerCase.split("[^\\p{L}]+").filter(_.nonEmpty)
+    val words = text.toLowerCase(java.util.Locale.ROOT).split("[^\\p{L}]+").filter(_.nonEmpty)
     if (words.length < 2) return "?"
     var bestLang = "?"
     var bestHits = 0

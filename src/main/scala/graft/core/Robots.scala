@@ -66,13 +66,13 @@ object RobotsTxt {
     content.linesIterator.foreach { raw =>
       val line = stripComment(raw).trim
       if (line.nonEmpty) {
-        val lower = line.toLowerCase
+        val lower = line.toLowerCase(java.util.Locale.ROOT)
         def value(kw: String): String = line.substring(kw.length).trim
         if (lower.startsWith("user-agent:")) {
           val ua = value("user-agent:").stripSuffix("?")
           if (ua.nonEmpty) {
             if (addedRulesToGroup) { currentGroup = Nil; addedRulesToGroup = false }
-            val g = byName.getOrElseUpdate(ua.toLowerCase, new MutableGroup(ua))
+            val g = byName.getOrElseUpdate(ua.toLowerCase(java.util.Locale.ROOT), new MutableGroup(ua))
             currentGroup = currentGroup :+ g
           }
         } else if (lower.startsWith("disallow:")) {

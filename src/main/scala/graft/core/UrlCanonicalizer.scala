@@ -99,9 +99,9 @@ object UrlCanonicalizer {
   def canonicalize(url: String): Option[String] = {
     try {
       val u = new URI(iriToUri(url.split('#')(0).trim)).normalize()
-      val scheme = Option(u.getScheme).map(_.toLowerCase).orNull
+      val scheme = Option(u.getScheme).map(_.toLowerCase(java.util.Locale.ROOT)).orNull
       if (scheme != "http" && scheme != "https") return None
-      var host = Option(u.getHost).map(_.toLowerCase).orNull
+      var host = Option(u.getHost).map(_.toLowerCase(java.util.Locale.ROOT)).orNull
       if (host == null) return None
       while (host.endsWith(".")) host = host.dropRight(1)
       val defaultPort = if (scheme == "https") 443 else 80

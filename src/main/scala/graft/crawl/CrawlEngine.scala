@@ -490,8 +490,7 @@ final class CrawlEngine(
     // Only UNIQUENESS needs cross-doc work; totals/language were folded
     // locally in the extract mapPartitions (PageResult.total_words/lang).
     val blocks = results.flatMap { r =>
-      DocAnalysis.analyzableItems(r.spans).map(it =>
-        (r.seq, it.offset, it.text_hash, it.words))
+      DocAnalysis.textKeys(r.spans).map(k => (r.seq, k.offset, k.text_hash, k.words))
     }.toDF("seq", "offset", "text_hash", "words")
 
     // first occurrence within the wave, by deterministic (seq, offset) order
@@ -849,7 +848,7 @@ final class CrawlEngine(
           .persist() // write + count both read it; released in-branch below
         Future(timed(wave, "stage:frontier") {
           try {
-            io.stage("frontier", wave + 1, nextFrontierP)
+            io.stage("frontier", wave + 1, sized(nextFrontierP, pagesFetched * 2048L))
             (newAssigned, nextFrontierP.count())
           } finally {
             newFrontierP.unpersist()

@@ -131,7 +131,7 @@ object HttpFetcher {
 
   /** mime type without parameters, lowercased. */
   def mimeOf(contentType: String): String =
-    contentType.split(';')(0).trim.toLowerCase
+    contentType.split(';')(0).trim.toLowerCase(java.util.Locale.ROOT)
 
   /** The reference's processed content types (`CrawlDecisionMaker.cs:99-144`,
     * config at `WebsiteTextExtractor.cs:121`).

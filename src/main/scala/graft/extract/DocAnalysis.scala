@@ -15,19 +15,24 @@ final case class AnalyzedItem(
     words: Int,
     lang: String)
 
+/** Language-free key of one analyzable item: what the first-wins block
+  * dedup and the render ownership window need.
+  */
+final case class TextKey(offset: Int, text: String, text_hash: Long, words: Int)
+
 object DocAnalysis {
 
   private val titledStarts = Set("Section.Start", "List.Start", "Table.Start")
 
-  def analyzableItems(spans: Seq[Span]): Seq[AnalyzedItem] =
-    spans.flatMap { s =>
-      val isTitle = titledStarts.contains(s.kind) && s.text.nonEmpty
-      val isBlock = s.kind == "TextBlock.Text"
-      if (isTitle || isBlock) {
-        val stats = TextStats.of(s.text)
-        Some(AnalyzedItem(s.offset, s.text, TextStats.textHash(s.text), stats.words, LangId.detect(s.text)))
-      } else None
+  /** Keys of the analyzable items in span order, without language detection. */
+  def textKeys(spans: Seq[Span]): Seq[TextKey] =
+    spans.collect {
+      case s if (titledStarts.contains(s.kind) && s.text.nonEmpty) || s.kind == "TextBlock.Text" =>
+        TextKey(s.offset, s.text, TextStats.textHash(s.text), TextStats.of(s.text).words)
     }
+
+  def analyzableItems(spans: Seq[Span]): Seq[AnalyzedItem] =
+    textKeys(spans).map(k => AnalyzedItem(k.offset, k.text, k.text_hash, k.words, LangId.detect(k.text)))
 
   /** Document language = argmax of per-language word sums, first-seen wins
     * ties (C# dictionary Aggregate semantics, `NLPTextAnalyzer.cs:94-97`).

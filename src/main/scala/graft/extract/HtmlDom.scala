@@ -97,7 +97,7 @@ object HtmlParser {
           val end = html.indexOf('>', lt)
           if (end < 0) { i = n }
           else {
-            val tag = html.substring(lt + 2, end).trim.toLowerCase
+            val tag = html.substring(lt + 2, end).trim.toLowerCase(java.util.Locale.ROOT)
             closeElem(tag)
             i = end + 1
           }
@@ -105,7 +105,7 @@ object HtmlParser {
           parseTag(html, lt) match {
             case Some((tag, attrs, selfClosed, after)) =>
               if (RawText.contains(tag) && !selfClosed) {
-                val closeIdx = html.toLowerCase.indexOf(s"</$tag", after)
+                val closeIdx = indexOfCloseTag(html, tag, after)
                 openElem(tag, attrs, selfClosed = false)
                 // attach raw content as a text child, then pop
                 val contentEnd = if (closeIdx < 0) n else closeIdx
@@ -127,6 +127,18 @@ object HtmlParser {
     root
   }
 
+  /** Index of the first `</tag` at or after `from`, or -1. The tag name is
+    * matched case-insensitively in place: lowercasing a copy of the page
+    * would cost O(page) per raw-text element, and its indices drift from the
+    * original wherever a char lowercases to two (U+0130).
+    */
+  private def indexOfCloseTag(html: String, tag: String, from: Int): Int = {
+    var i = html.indexOf("</", from)
+    while (i >= 0 && !html.regionMatches(true, i + 2, tag, 0, tag.length))
+      i = html.indexOf("</", i + 2)
+    i
+  }
+
   /** Parses "<tag attr=... >" starting at `lt`. Returns (tag, attrs,
     * selfClosed, indexAfterGt).
     */
@@ -136,7 +148,7 @@ object HtmlParser {
     val tagStart = i
     while (i < n && (html.charAt(i).isLetterOrDigit || html.charAt(i) == '-')) i += 1
     if (i == tagStart) return None
-    val tag = html.substring(tagStart, i).toLowerCase
+    val tag = html.substring(tagStart, i).toLowerCase(java.util.Locale.ROOT)
     val attrs = Map.newBuilder[String, String]
     var selfClosed = false
     var done = false
@@ -152,7 +164,7 @@ object HtmlParser {
           val nameStart = i
           while (i < n && !html.charAt(i).isWhitespace &&
                  html.charAt(i) != '=' && html.charAt(i) != '>' && html.charAt(i) != '/') i += 1
-          val name = html.substring(nameStart, i).toLowerCase
+          val name = html.substring(nameStart, i).toLowerCase(java.util.Locale.ROOT)
           while (i < n && html.charAt(i).isWhitespace) i += 1
           if (i < n && html.charAt(i) == '=') {
             i += 1

@@ -367,4 +367,78 @@ class LangIdSpec extends AnyFunSuite {
   test("random-keyboard gibberish abstains") {
     assert(LangId.detect("qwrtp zxcvb mnbvc lkjhg") == "?")
   }
+
+  /** Deterministic corpus that pins the classifier's exact outputs: the
+    * fixtures above, seeded Latin / accented / mixed-script texts (final
+    * sigma, dotted capital I, micro sign, ordinal indicators, CJK and
+    * supplementary letters inside Latin words, upper case), words longer
+    * than 64 letters, and texts past [[LangId.MaxProfileChars]].
+    */
+  private def pinCorpus: Vector[String] = {
+    val rnd = new scala.util.Random(20261017L)
+    val latin = "abcdefghijklmnopqrstuvwxyz"
+    val accented = "éèêàâçñüöäßøåœæíóúãõëïîôûÿ"
+    val pieces = Vector("ΣΟΦΟΣ", "σοφος", "ΟΔΟΣ", "ἈΣ", "İstanbul", "İİ", "µm", "ª",
+      "º", "東京", "中文字", "STRASSE", "ǅ", "ﬁ", "K", "ſ", "ı", "𝔘𝔫𝔦",
+      "́", "Ⅻ", "ǈ", "ẞ")
+    val seps = Vector(" ", " ", " ", ", ", ". ", "\n", " ", " 42 ", "-", "'")
+    def letters(alpha: String, n: Int): String =
+      (0 until n).map(_ => alpha.charAt(rnd.nextInt(alpha.length))).mkString
+    val vocab = heldOut.flatMap(_._2.split("[ .,?]+")).filter(_.nonEmpty).toVector
+    def word(mix: Int): String = rnd.nextInt(10) match {
+      case k if k < mix => pieces(rnd.nextInt(pieces.size))
+      case k if k < 6 => vocab(rnd.nextInt(vocab.size))
+      case 8 => letters(latin + accented, 1 + rnd.nextInt(9))
+      case 9 => letters(latin, 1 + rnd.nextInt(9)).toUpperCase(java.util.Locale.ROOT)
+      case _ => letters(latin, 1 + rnd.nextInt(9))
+    }
+    def text(words: Int, mix: Int): String =
+      (0 until words).map(_ => word(mix) + seps(rnd.nextInt(seps.size))).mkString
+    val fixtures = heldOut.map(_._2) ++ Seq(
+      "the cat and the dog are in the house", "le chat et le chien sont dans la maison",
+      "der Hund und die Katze sind in dem Haus", "el perro y el gato en la casa",
+      "zzz qqq xxx", "word", "qwrtp zxcvb mnbvc lkjhg", "",
+      "Поезд отправляется завтра утром в семь часов.", "明天早上七点火车从主要车站出发。",
+      "΄Ολοι οι άνθρωποι γεννιούνται ελεύθεροι και ίσοι.",
+      "كل الناس يولدون أحرارا ومتساوين في الكرامة والحقوق.",
+      "すべての人間は生まれながらにして自由である。", "모든 인간은 태어날 때부터 자유롭다.")
+    val seeded = (0 until 1200).map(i => text(1 + rnd.nextInt(30), i % 4))
+    val longWords = (0 until 40).map(i =>
+      text(rnd.nextInt(4), 1) + letters(latin + accented, 65 + rnd.nextInt(200)) + " " +
+        text(rnd.nextInt(4), i % 3))
+    val longTexts = (0 until 24).map(i =>
+      text(700 + rnd.nextInt(1200), i % 4) + heldOut(i % heldOut.size)._2)
+    val boundary = Seq( // a two-char lowercase expansion straddling the cut
+      "a " * ((LangId.MaxProfileChars - 1) / 2) + "İstanbul and more words",
+      "ab" * (LangId.MaxProfileChars / 2 - 1) + "Σ end of text")
+    (fixtures ++ seeded ++ longWords ++ longTexts ++ boundary).toVector
+  }
+
+  test("classifier outputs are pinned by a digest over a deterministic corpus") {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val corpus = pinCorpus
+    corpus.foreach { t =>
+      val line = LangId.detect(t) + "\u0000" + LangId.profile(t).mkString("\u0001") +
+        "\u0000" + LangId.profile(t, LangId.MaxProfileChars).mkString("\u0001") + "\n"
+      md.update(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    val digest = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    val langs = corpus.groupBy(LangId.detect).map { case (l, ts) => l -> ts.size }
+    assert(langs.size >= 5, s"corpus exercises too few outcomes: $langs")
+    assert(digest == "b43b9e265a17b2d0d9e700ae3153ab408d8eff7c893897319e0e678b05763bbf",
+      s"LangId outputs changed on the pinned corpus ($langs)")
+  }
+
+  test("detect gives the same answers from concurrent threads") {
+    val corpus = pinCorpus.take(400)
+    val expected = corpus.map(LangId.detect)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futures = (0 until 4).map(k => pool.submit(new java.util.concurrent.Callable[Vector[String]] {
+        def call(): Vector[String] =
+          if (k % 2 == 0) corpus.map(LangId.detect) else corpus.reverse.map(LangId.detect).reverse
+      }))
+      futures.zipWithIndex.foreach { case (f, k) => assert(f.get() == expected, s"thread $k disagrees") }
+    } finally pool.shutdown()
+  }
 }

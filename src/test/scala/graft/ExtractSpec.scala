@@ -374,6 +374,79 @@ class ExtractSpec extends AnyFunSuite {
     }
   }
 
+  test("a dotted capital I before a <style> block leaves the spans unchanged") {
+    // U+0130 lowercases to two chars; the raw-text close tag must still be
+    // found at its index in the original page
+    val page = (lead: String) =>
+      s"<html><body><p>$lead</p><style>.x{display:none}</style>" +
+        "<p class=\"x\">hidden</p><p>shown</p></body></html>"
+    val dotted = "\u0130" * 12
+    assert(ktext(spansOf(page(dotted))) ==
+      Seq(("TextBlock.Text", dotted), ("TextBlock.Text", "shown")))
+    assert(spansOf(page(dotted)).drop(1) == spansOf(page("I" * 12)).drop(1))
+  }
+
+  test("thousands of <script> elements parse in bounded time") {
+    val html = "<html><body>" +
+      (0 until 20000).map(i => s"<SCRIPT>var v$i = '<p>no</p>';</SCRIPT><p>t$i</p>").mkString +
+      "</body></html>"
+    val t0 = System.nanoTime()
+    val spans = spansOf(html)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(spans.count(_.kind == "TextBlock.Text") == 20000)
+    assert(!spans.exists(_.text.contains("no")))
+    assert(secs < 5.0, f"parse took $secs%.1f s")
+  }
+
+  test("case folding ignores a Turkish default locale (HTML and robots.txt)") {
+    val upper =
+      """<HTML><HEAD><TITLE>Title</TITLE><STYLE>.HIDE{DISPLAY:NONE}</STYLE></HEAD>
+        |<BODY><SCRIPT>var x = 1;</SCRIPT><P CLASS="HIDE">hidden</P><P>shown</P>
+        |<A HREF="/in.html">in</A><A HREF="/out.html" REL="NOFOLLOW">out</A></BODY></HTML>""".stripMargin
+    val robots = "USER-AGENT: *\nDISALLOW: /private/\nCRAWL-DELAY: 3\n"
+    def observe() = {
+      val d = HtmlToSpans.extract(upper)
+      val r = graft.core.RobotsTxt.parse(robots)
+      (d.title, d.spans, HtmlToSpans.rawLinks(HtmlParser.parse(upper))._1,
+        r.allowed("/private/x", "graftbot"), r.crawlDelaySec("graftbot"),
+        graft.core.LangId.detect("IT IS IN THE LIST OF THINGS THAT WE DID"))
+    }
+    val saved = java.util.Locale.getDefault
+    val (english, turkish) =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.ENGLISH)
+        val en = observe()
+        java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+        (en, observe())
+      } finally java.util.Locale.setDefault(saved)
+    assert(english._1 == "Title")
+    assert(ktext(english._2) == Seq(("TextBlock.Text", "shown"), ("TextBlock.Text", "in out")))
+    assert(english._3 == Vector("/in.html"))
+    assert(!english._4 && english._5 == 3)
+    assert(turkish == english)
+  }
+
+  test("language-free text keys equal the analyzable items' key projection") {
+    val pages = Seq(
+      SyntheticWeb.generate(SyntheticWeb.Spec(hosts = 3, pagesPerHost = 8, hotHostFactor = 2)),
+      SyntheticWeb.generate(SyntheticWeb.Spec(hosts = 2, pagesPerHost = 6, hotHostFactor = 1,
+        fanout = 8, seed = 99L, treeLinks = true, sharedDomain = true)))
+      .flatMap(_.pages.values.map(_.html)) ++ Seq(
+      "<html><body><h2>A</h2><p>pa</p><h3>B</h3><p>pb</p></body></html>",
+      "<html><body><ul><li>one</li><li>two</li></ul><table><caption>T</caption>" +
+        "<tr><td>c</td></tr></table><nav><ul><li>menu</li></ul></nav></body></html>")
+    var items = 0
+    pages.foreach { html =>
+      val spans = spansOf(html)
+      val keys = graft.extract.DocAnalysis.textKeys(spans)
+      val analyzed = graft.extract.DocAnalysis.analyzableItems(spans)
+      assert(keys.map(k => (k.offset, k.text_hash, k.words)) ==
+        analyzed.map(a => (a.offset, a.text_hash, a.words)))
+      items += keys.size
+    }
+    assert(items > 100)
+  }
+
   test("nbsp fidelity: decode to U+00A0, end-trim, interior preserved, word split") {
     // reference: WebUtility.HtmlDecode yields U+00A0 for &nbsp;
     // (HtmlDocumentConverter.cs:634 Trim('\u00A0') after decode; C# Trim()
