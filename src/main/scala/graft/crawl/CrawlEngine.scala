@@ -3,7 +3,7 @@ package graft.crawl
 import graft.core.{ScopeFilter, UrlCanonicalizer}
 import graft.extract.{DocAnalysis, HtmlParser, HtmlToSpans, PdfToSpans}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -189,10 +189,13 @@ final class CrawlEngine(
       // fence tripped — the bucket answers "maybe" for every key, so its
       // candidates all pay the exact anti-join): rebuild JUST those from
       // the authoritative seen table at doubled capacity. The check reads
-      // two columns of an O(numPartitions)-row table; the heal scan runs
-      // only when saturation actually exists.
-      val sat = persisted.filter($"saturated").select($"bucket")
-        .as[Int].collect().toSet
+      // two columns of an O(numPartitions)-row table, and is skipped when
+      // the write that produced these buckets counted none saturated; the
+      // heal scan runs only when saturation actually exists.
+      val sat =
+        if (CrawlEngine.noneSaturated(io)) Set.empty[Int]
+        else persisted.filter($"saturated").select($"bucket")
+          .as[Int].collect().toSet
       if (sat.isEmpty) persisted
       else {
         val satB = spark.sparkContext.broadcast(sat)
@@ -354,10 +357,10 @@ final class CrawlEngine(
     // take(65) decides the branch AND delivers the ≤64 names in the SAME
     // job (the old shape ran a count job, then a second collect job on
     // discovery waves); only the >64 case pays a full count
-    val newHostsTaken = timed(wave, "hosts")(newHosts.take(65))
-    val newHostsCount =
-      if (newHostsTaken.length <= 64) newHostsTaken.length.toLong
-      else newHosts.count()
+    val (newHostsTaken, newHostsCount) = timed(wave, "hosts") {
+      val taken = newHosts.take(65)
+      (taken, if (taken.length <= 64) taken.length.toLong else newHosts.count())
+    }
     // few new hosts → fetch robots on the driver (no job round-trip; the
     // ≤64 take is the only names-to-driver path and is O(64) by
     // construction; the common late-wave zero case runs one short-circuit
@@ -806,6 +809,8 @@ final class CrawlEngine(
         .groupBy($"host").agg(sum($"pages").as("pages"))
       staged("stage:hostcounts")(io.stage("host_counts", wave, hostCountsDf))
     }
+    // saturated buckets among the staged filters, counted on their write
+    val obsSaturated = org.apache.spark.sql.Observation()
     if (useBloom) {
       // fold this wave's accepted hashes into their buckets' filters and
       // stage the full bucket set for wave N (buckets with no additions
@@ -822,7 +827,8 @@ final class CrawlEngine(
                      else FilterBucket.of(b, graft.core.BloomFilter64.forCapacity(cap, fpr))
           Iterator(base.addAll(hs))
         }
-      staged("stage:blooms")(io.stage("blooms", wave, newBlooms))
+      staged("stage:blooms")(io.stage("blooms", wave,
+        newBlooms.observe(obsSaturated, CrawlEngine.saturatedBuckets.as("n"))))
     }
     // seqs are assigned BEFORE the retroactive exclude filter (the oracle's
     // seq counter is monotonic over assignments, not survivors).
@@ -889,7 +895,9 @@ final class CrawlEngine(
     // current numPartitions (resume-at-different-parallelism safety)
     val stats = if (useBloom)
       baseStats + ("bloom_buckets" -> nb.toLong) +
-        ("blooms_v" -> CrawlEngine.BloomsVersion)
+        ("blooms_v" -> CrawlEngine.BloomsVersion) ++
+        CrawlEngine.saturationStats(obsSaturated.get("n").asInstanceOf[Long],
+          io.stat("gen_blooms").getOrElse(0L))
     else baseStats
     io.commitWave(wave, stats, stopReason)
 
@@ -918,6 +926,26 @@ object CrawlEngine {
     * for the Bloom→Cuckoo retraction transition.
     */
   val BloomsVersion = 2L
+
+  /** Number of saturated filter buckets, observed on a blooms write. */
+  private[crawl] def saturatedBuckets: Column = count(when(col("saturated"), 1))
+
+  /** Manifest stats recording that the committed filter buckets of blooms
+    * generation `gen` hold `saturated` saturated buckets. They are committed
+    * together with the buckets they describe (a wave commit, or a forget's
+    * generation flip).
+    */
+  private[crawl] def saturationStats(saturated: Long, gen: Long): Map[String, Long] =
+    Map("blooms_saturated" -> saturated, "blooms_saturated_gen" -> gen)
+
+  /** Whether the committed filter buckets are known to hold no saturated
+    * bucket. A warehouse without the stats (legacy, a wave that did not
+    * engage the filters) or whose blooms generation was flipped without
+    * them cannot tell, and answers false.
+    */
+  private[crawl] def noneSaturated(io: TableIO): Boolean =
+    io.stat("blooms_saturated").contains(0L) &&
+      io.stat("blooms_saturated_gen") == Some(io.stat("gen_blooms").getOrElse(0L))
 
   /** Bootstrap a fresh warehouse exactly as a new engine would (the
     * commit-"-1" contract: root frontier entry + seen set + persisted
@@ -953,15 +981,16 @@ object CrawlEngine {
     io.commitWave(-1, stats)
   }
 
-  /** JVM-shared driver pool for concurrent per-wave stage writes (step 8).
+  /** JVM-shared driver pool for concurrent per-wave stage writes (step 8)
+    * and for a forget's generation writes ([[SeenMaintenance]]).
     * Sized to overlap job-scheduling + parquet-commit latency, not to add
     * compute parallelism (executor cores do the work either way). Shared
     * across engine instances and daemon-threaded, so repeated engine
     * construction (tests, multi-crawl drivers) never accumulates threads
-    * and the pool dies with the JVM; the wave loop always awaits all
-    * staging futures before committing.
+    * and the pool dies with the JVM; the wave loop and the forget always
+    * await all their futures before committing.
     */
-  private lazy val stageEc = scala.concurrent.ExecutionContext.fromExecutor(
+  private[crawl] lazy val stageEc = scala.concurrent.ExecutionContext.fromExecutor(
     java.util.concurrent.Executors.newFixedThreadPool(8,
       new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -288,8 +288,11 @@ object TableIO {
     "wave int, seq bigint, url string, host string, status int, " +
     "error_class string, error_message string, error_stack string, retry_count int"
 
+  /** An absent table: an empty local relation, which the optimizer prunes
+    * out of the joins and unions that read it.
+    */
   def emptyDf(spark: SparkSession, schemaDdl: String): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
 }

@@ -395,6 +395,176 @@ class SeenMaintenanceSpec extends AnyFunSuite {
       .compactEveryWaves == 0)
   }
 
+  // ---- pinned outputs ----------------------------------------------------------
+
+  /** What a forget or compaction leaves behind, as one comparable line: its
+    * return value, the manifest stats maintenance commits, the seen set, the
+    * pending reseed rows (path, seq, depth) and each bucket's kind
+    * (b = Bloom, c = Cuckoo, ! = saturated).
+    */
+  private def outputsOf(io: TableIO, result: Any): String = {
+    val stats = Seq("seen_total", "next_frontier", "max_seq", "reseed_wave",
+      "gen_seen", "gen_blooms", "gen_reseed", "gen_unique_blocks")
+      .map(k => s"$k=${io.stat(k).fold("-")(_.toString)}").mkString(" ")
+    val seen = seenOf(io).toSeq.sorted
+    val reseed = io.stat("reseed_wave").toSeq.flatMap { w =>
+      io.readWave("reseed", w.toInt, TableIO.FrontierSchema, lookahead = 1)
+        .select("url", "seq", "depth").collect().toSeq
+        .map(r => s"${new java.net.URI(r.getString(0)).getPath}@${r.getLong(1)}/${r.getInt(2)}")
+    }.sorted.mkString(",")
+    val buckets = bucketsOf(io).toSeq.sortBy(_._1).map { case (b, f) =>
+      s"$b${if (f.kind == FilterBucket.KindCuckoo) "c" else "b"}" +
+        (if (f.saturated) "!" else "")
+    }.mkString(",")
+    s"$result | $stats | seen ${seen.size} ${seen.hashCode} | reseed $reseed" +
+      s" | buckets $buckets"
+  }
+
+  test("forget and compaction outputs are pinned: reports, manifest stats," +
+      " seen set, reseed rows and bucket kinds") {
+    val wh = Files.createTempDirectory("graft-forget-pinned").toString
+    val io = new TableIO(wh, spark)
+    // a wider site than the other tests' so that two waves fetch enough
+    // pages to spread the targets over Bloom and Cuckoo buckets
+    val wide = SyntheticWeb.generate(SyntheticWeb.Spec(hosts = 1,
+      pagesPerHost = 40, hotHostFactor = 1, fanout = 4, treeLinks = true))
+    new CrawlEngine(spark, io, config.copy(rootUrl = wide.rootUrl),
+      new SyntheticFetcher(wide.pages, robots), numPartitions = 4)
+      .run(3) // stop mid-crawl: the next frontier is pending
+    val c0 = io.committedWave
+    val nb = io.stat("bloom_buckets").get.toInt
+    def bucket(u: String): Int = CrawlEngine.bloomBucket(hashOf(u), nb)
+    val fetched = io.readAll("fetch_log", TableIO.FetchLogSchema)
+      .filter("status = 200").orderBy("seq").select("url").collect()
+      .map(_.getString(0)).filter(_ != wide.rootUrl).toSeq
+    val pending = io.readWave("frontier", c0 + 1, TableIO.FrontierSchema,
+      lookahead = 1).orderBy("seq").select("url").collect().head.getString(0)
+    // a and b turn their buckets to Cuckoo; the later batches mix targets in
+    // Bloom buckets (d, g), in Cuckoo buckets (e, h) and anywhere (c, f)
+    val a = fetched.head
+    val b = fetched.find(bucket(_) != bucket(a)).get
+    val cuckoo = Set(bucket(a), bucket(b))
+    val rest = fetched.filterNot(Set(a, b))
+    val (inCuckoo, inBloom) = rest.partition(u => cuckoo(bucket(u)))
+    val Seq(d, g) = inBloom.take(2)
+    val Seq(e, h) = inCuckoo.take(2)
+    val Seq(c, f) = rest.filterNot(Set(d, g, e, h)).take(2)
+    val junk = "not a url"
+
+    val outputs = Seq(
+      outputsOf(io, SeenMaintenance.forgetUrls(spark, wh, Seq(a, b), reseed = false)),
+      // reseed: a was retracted (re-enters seen), pending is skipped, junk is
+      // ignored, c is listed twice
+      outputsOf(io, SeenMaintenance.forgetUrls(spark, wh,
+        Seq(a, pending, junk, c, c, d, e), reseed = true)),
+      // retraction: cancels c's pending recrawl, b is already retracted
+      outputsOf(io, SeenMaintenance.forgetUrls(spark, wh,
+        Seq(b, pending, junk, c, f, f, g, h), reseed = false)),
+      outputsOf(io, SeenMaintenance.compactTable(spark, wh, "seen")),
+      outputsOf(io, SeenMaintenance.compactTable(spark, wh, "unique_blocks")))
+    // the outputs of the sequence above; any rework of the maintenance
+    // passes must reproduce them exactly
+    val expected = Seq(
+      "ForgetReport(2,2,0,0,2,0,0) | seen_total=47 next_frontier=23 max_seq=44" +
+        " reseed_wave=- gen_seen=1 gen_blooms=1 gen_reseed=- gen_unique_blocks=-" +
+        " | seen 47 997982291 | reseed  | buckets 0c,1c,2b,3b",
+      "ForgetReport(4,0,4,0,0,0,1) | seen_total=48 next_frontier=27 max_seq=48" +
+        " reseed_wave=3 gen_seen=2 gen_blooms=2 gen_reseed=1 gen_unique_blocks=-" +
+        " | seen 48 -508384945 | reseed /p1.html@45/1,/p3.html@46/1," +
+        "/p4.html@47/1,/p6.html@48/2 | buckets 0c,1c,2b,3b",
+      "ForgetReport(5,4,0,0,2,2,1) | seen_total=44 next_frontier=26 max_seq=48" +
+        " reseed_wave=3 gen_seen=3 gen_blooms=3 gen_reseed=2 gen_unique_blocks=-" +
+        " | seen 44 1946652796 | reseed /p1.html@45/1,/p3.html@46/1," +
+        "/p4.html@47/1 | buckets 0c,1c,2c,3c",
+      "44 | seen_total=44 next_frontier=26 max_seq=48 reseed_wave=3 gen_seen=4" +
+        " gen_blooms=3 gen_reseed=2 gen_unique_blocks=- | seen 44 1946652796" +
+        " | reseed /p1.html@45/1,/p3.html@46/1,/p4.html@47/1 | buckets 0c,1c,2c,3c",
+      "213 | seen_total=44 next_frontier=26 max_seq=48 reseed_wave=3 gen_seen=4" +
+        " gen_blooms=3 gen_reseed=2 gen_unique_blocks=1 | seen 44 1946652796" +
+        " | reseed /p1.html@45/1,/p3.html@46/1,/p4.html@47/1 | buckets 0c,1c,2c,3c")
+    outputs.zip(expected).zipWithIndex.foreach { case ((o, e), i) =>
+      assert(o == e, s"step ${i + 1}")
+    }
+    assertNoFalseNegatives(io)
+  }
+
+  // ---- execution budget ------------------------------------------------------
+
+  /** Spark SQL executions that `f` starts. Listener events arrive
+    * asynchronously but in order, so marker queries run before and after
+    * `f` delimit its executions exactly.
+    */
+  private def sqlExecutions(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val counting = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => s.description match {
+          case "budget-start" => counting.set(true)
+          case "budget-end" => counting.set(false); done.countDown()
+          case _ => if (counting.get) counted.incrementAndGet()
+        }
+        case _ =>
+      }
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("budget-start")
+      f
+      marker("budget-end")
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      counted.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a forget is one aggregation plus its generation writes; a" +
+      " compaction is its write") {
+    val whFilters = Files.createTempDirectory("graft-budget-filters").toString
+    val ioFilters = crawl(whFilters)
+    val whPlain = Files.createTempDirectory("graft-budget-plain").toString
+    val ioPlain = new TableIO(whPlain, spark)
+    new CrawlEngine(spark, ioPlain, config.copy(bloomMinSeenRows = Long.MaxValue),
+      new SyntheticFetcher(site.pages, robots), numPartitions = 4).run()
+    assert(ioFilters.stat("bloom_buckets").nonEmpty)
+    assert(ioPlain.stat("bloom_buckets").isEmpty)
+    // the crawl counted its filter buckets' saturation on their write, so
+    // the next wave skips its saturation check
+    def saturationStats(io: TableIO) =
+      (io.stat("blooms_saturated"), io.stat("blooms_saturated_gen"))
+    assert(saturationStats(ioFilters) == (Some(0L), Some(0L)))
+
+    // retraction with filters: aggregation, seen write, blooms write
+    var report: SeenMaintenance.ForgetReport = null
+    val retractFilters = sqlExecutions { report =
+      SeenMaintenance.forgetUrls(spark, whFilters, Seq(url(5), url(6)), reseed = false) }
+    assert(report.retractedSeen == 2 && report.bucketsRebuiltToCuckoo > 0)
+    assert(retractFilters <= 4, s"$retractFilters executions")
+    // ... and so did the forget's blooms write, for the generation it flips
+    assert(saturationStats(ioFilters) == (Some(0L), ioFilters.stat("gen_blooms")))
+    // reseed of a retracted url with filters: aggregation, reseed, seen
+    // and blooms writes
+    val reseedFilters = sqlExecutions { report =
+      SeenMaintenance.forgetUrls(spark, whFilters, Seq(url(5)), reseed = true) }
+    assert(report.reseeded == 1)
+    assert(reseedFilters <= 4, s"$reseedFilters executions")
+    // retraction without filters: aggregation, seen write
+    val retractPlain = sqlExecutions { report =
+      SeenMaintenance.forgetUrls(spark, whPlain, Seq(url(5), url(6)), reseed = false) }
+    assert(report.retractedSeen == 2)
+    assert(retractPlain <= 2, s"$retractPlain executions")
+    for (wh <- Seq(whFilters, whPlain)) {
+      val compaction = sqlExecutions(SeenMaintenance.compactTable(spark, wh, "seen"))
+      assert(compaction <= 1, s"$compaction executions")
+    }
+  }
+
   // ---- maintenance-commit atomicity ---------------------------------------
 
   test("a staged generation is invisible until the atomic manifest flip") {
